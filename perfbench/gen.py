@@ -25,7 +25,7 @@ import pyarrow.parquet as pq
 # Sizes are fixed by the benchmark definition (not by the seed), so the
 # same work is measured on every seed.
 ETL = dict(orders=15_000, files=8, suppliers=500, parts=4_000)
-NEARDUP = dict(arrivals=24, fresh=60, dup_within=10, dup_earlier=10,
+NEARDUP = dict(arrivals=8, fresh=60, dup_within=10, dup_earlier=10,
                vocab=40_000, words=(45, 70))
 LAKE = dict(initial=10_000, users=400, cycles=6, append_rows=400,
             merge_rows=200)
@@ -151,7 +151,8 @@ def gen_etl(seed, out):
         "o_orderkey": int(okey.sum()), "o_totalprice": int(o_total.sum()) / 100.0}
 
     con = duckdb.connect()
-    con.execute(f"""CREATE VIEW lineitem AS SELECT * FROM read_csv(
+    # parsed once; every query below reads the table
+    con.execute(f"""CREATE TABLE lineitem AS SELECT * FROM read_csv(
         '{out}/lineitem_csv/*.csv.gz', delim='|', header=true, all_varchar=true)""")
     con.execute(f"CREATE VIEW orders AS SELECT * FROM read_parquet('{out}/orders.parquet')")
     q = lambda sql: [list(row) for row in con.execute(sql).fetchall()]
@@ -312,12 +313,17 @@ def gen_neardup(seed, out):
 # --------------------------------------------------------------------------
 # lakehouse_mixed
 
-# One cycle of the mix; the seed shuffles the order within each cycle.
-# Appends are two thirds of the commits and point reads three quarters of
-# the reads, as in a table fed by ingest and served by key lookups; each
-# class median then sits inside one op kind.
-CYCLE = (["append"] * 6 + ["merge", "delete"]
-         + ["point_read"] * 10 + ["range_read", "view_sync"])
+# One cycle of the mix, in a fixed order: the seed draws the rows, keys
+# and users, not the order, because a merge or delete costs more the more
+# appends came before it in the cycle, and a seeded order made the
+# per-run figures move with the seed.
+# The proportions are a choice, not measured from a real table: every op
+# kind runs at least once a cycle, appends are most of the commits and
+# point reads most of the reads (a table fed by ingest and served by key
+# lookups). Another mix weighs the kinds differently in the class means.
+A, P = "append", "point_read"
+CYCLE = [A, P, P, A, P, P, "merge", P, P, A, P, P, "range_read", P, P, A, P, P,
+         "delete", P, P, A, P, P, "view_sync", P, P, A, P, P]
 OPTIMIZE_EVERY = 8  # commits between optimize calls: once per cycle
 # cycle 0 is the client's warm-up: every op kind once
 WARMUP = ["append", "merge", "delete", "point_read", "range_read", "optimize"]
@@ -344,7 +350,7 @@ def gen_lake(seed, out):
     write_parquet(events(LAKE["initial"]), f"{out}/rows/initial.parquet")
     ops, commits = [], 0
     for c in range(LAKE["cycles"]):
-        for kind in WARMUP if c == 0 else [CYCLE[i] for i in r.permutation(len(CYCLE))]:
+        for kind in WARMUP if c == 0 else CYCLE:
             op = {"cycle": c, "kind": kind}
             n_ids = next_id[0] - 1
             if kind == "append":

@@ -5,6 +5,8 @@ import math
 import re
 import statistics
 
+import numpy as np
+
 NAME_RE = re.compile(r"[A-Za-z0-9_.-]+")
 
 # percentiles a tail may be reported at, highest first
@@ -16,6 +18,8 @@ SPARK_OPS = ("load", "insert", "query", "unload", "batch", "append", "merge",
 SPARK_FIELDS = ("jobs", "driver_gap_s", "input_mb", "output_mb", "shuffle_mb",
                 "executor_cpu_s")
 MB = 1e6
+# op kinds that hand new rows to the program; their rows count as ingest
+INGEST_KINDS = ("load", "insert", "batch", "append", "merge")
 
 # name -> (unit, better), in the order BENCHMARK.json lists them
 END_TO_END = {
@@ -88,8 +92,22 @@ def tail_percentile(n):
 
 
 def percentile(values, p):
-    """Nearest-rank percentile."""
-    return sorted(values)[rank(p, len(values)) - 1]
+    """Harrell-Davis estimate of percentile p: the order statistics
+    weighted by how much of a Beta((n+1)q, (n+1)(1-q)) distribution falls
+    between (i-1)/n and i/n. Every sample counts, so at the few samples of
+    one run, which mix operation kinds of different cost, it moves less
+    from run to run than the one sample at the nearest rank."""
+    n, q = len(values), p / 100
+    a, b = q * (n + 1), (1 - q) * (n + 1)
+    # a, b >= 1 for every percentile tail_percentile picks: a bounded density
+    x = np.linspace(0.0, 1.0, 100001)
+    inner = x[1:-1]
+    log_pdf = (a - 1) * np.log(inner) + (b - 1) * np.log1p(-inner)
+    pdf = np.concatenate(([0.0], np.exp(log_pdf - log_pdf.max()), [0.0]))
+    cdf = np.concatenate(([0.0], np.cumsum((pdf[1:] + pdf[:-1]) / 2)))
+    cdf /= cdf[-1]
+    edges = np.round(np.arange(n + 1) / n * (len(x) - 1)).astype(int)
+    return float(np.dot(np.diff(cdf[edges]), np.sort(values)))
 
 
 def union_length(intervals):
@@ -140,11 +158,25 @@ def durations(samples):
     return [s["t1"] - s["t0"] for s in samples]
 
 
-def end_to_end(record, input_rows, input_bytes):
-    """The end-to-end metrics of one untraced run. `input_rows` and
-    `input_bytes` map an op kind to the rows and bytes one call of that
-    kind hands to the program. Returns (metrics, notes) where notes
-    carry each tail's percentile and every sample count."""
+def input_of(sizes, sample):
+    """(rows, bytes) of the generated input a sample consumed; (0, 0) for none."""
+    return sizes[sample["input"]] if sample["input"] else (0, 0)
+
+
+def kind_input(record, sizes, kind):
+    """Median (rows, bytes) one measured call of `kind` consumed; (0, 0)
+    when the run made no such call."""
+    got = [input_of(sizes, s) for s in op_samples(record) if s["kind"] == kind]
+    if not got:
+        return 0, 0
+    return statistics.median(r for r, _ in got), statistics.median(b for _, b in got)
+
+
+def end_to_end(record, sizes):
+    """The end-to-end metrics of one untraced run. `sizes` maps each
+    generated input a sample names to the (rows, bytes) it hands to the
+    program. Returns (metrics, notes) where notes carry each tail's
+    percentile and every sample count."""
     commits = op_samples(record, cls="commit")
     reads = op_samples(record, cls="read")
     metrics, notes = {}, {}
@@ -157,12 +189,12 @@ def end_to_end(record, input_rows, input_bytes):
         metrics[f"{name}_tail_s"] = percentile(d, p)
         notes[f"{name}_mean_s"] = {"n": len(d)}
         notes[f"{name}_tail_s"] = {"n": len(d), "percentile": p}
-    ingest = [s for s in commits if s["kind"] in input_rows]
-    rows = sum(input_rows[s["kind"]] for s in ingest)
+    ingest = [s for s in commits if s["kind"] in INGEST_KINDS]
+    rows = sum(input_of(sizes, s)[0] for s in ingest)
     metrics["ingest_rows_per_s"] = rows / sum(durations(ingest))
     notes["ingest_rows_per_s"] = {"n": len(ingest), "rows": rows}
     timed = op_samples(record)
-    in_bytes = sum(input_bytes.get(s["kind"], 0) for s in timed)
+    in_bytes = sum(input_of(sizes, s)[1] for s in timed)
     written = sum(s["fsWritten"] for s in timed)
     metrics["bytes_written_per_input_byte"] = written / in_bytes
     notes["bytes_written_per_input_byte"] = {"written": written, "input": in_bytes}
@@ -170,10 +202,11 @@ def end_to_end(record, input_rows, input_bytes):
     return metrics, notes
 
 
-def per_layer(record, untraced, input_rows, input_bytes):
+def per_layer(record, untraced, sizes, export_rows):
     """Per-layer metrics of one traced run. Every name is emitted on
     every workload; a layer the workload never calls reads 0.
-    `untraced` is the record of the untraced run on the same seed."""
+    `untraced` is the record of the untraced run on the same seed,
+    `sizes` as for end_to_end, `export_rows` the rows one unload exports."""
     spans, jobs = record["spans"], record["jobs"]
     by_id = {s["id"]: s for s in spans}
     self_t = self_times(spans)
@@ -221,19 +254,20 @@ def per_layer(record, untraced, input_rows, input_bytes):
         return statistics.median([s[field] / base for s in ss]) if ss and base else 0.0
 
     m["io.load.read_amplification"] = ratio("io.Load.loadAndCopy", "fsRead",
-                                            input_bytes.get("load", 0))
+                                            kind_input(record, sizes, "load")[1])
     unloads = [s for s in spans if s["name"] == "io.Unload.unloadAndCopy"]
     m["io.unload.query_executions"] = (statistics.median(
         [len({root for t, root in record["sql_starts"] if s["t0"] <= t <= s["t1"]})
          for s in unloads]) if unloads else 0.0)
     m["io.unload.write_amplification"] = ratio(
         "io.Unload.unloadAndCopy", "fsWritten", record["observed"].get("export_bytes", 0))
-    for layer, span_name in (("load", "io.Load.loadAndCopy"),
-                             ("insert", "io.Insert.insertDataFrame"),
-                             ("unload", "io.Unload.unloadAndCopy")):
+    for layer, span_name, n in (
+            ("load", "io.Load.loadAndCopy", kind_input(record, sizes, "load")[0]),
+            ("insert", "io.Insert.insertDataFrame", kind_input(record, sizes, "insert")[0]),
+            ("unload", "io.Unload.unloadAndCopy", export_rows)):
         t = layer_time(span_name)
         m[f"io.{layer}.s"] = t
-        m[f"io.{layer}.rows_per_s"] = input_rows.get(layer, 0) / t if t else 0.0
+        m[f"io.{layer}.rows_per_s"] = n / t if t else 0.0
 
     for op, span_name in (("append", "ManifestTable.append"), ("merge", "ManifestDml.mergeInto"),
                           ("delete", "ManifestDml.deleteWhere"),

@@ -130,25 +130,17 @@ def run_jvm(cp, args, inp, work, seconds, traced, deadline):
 
 
 def input_sizes(workload, inp, expect):
-    """Rows and bytes one call of each op kind hands to the program."""
+    """Generated input (path under `inp`, as the client names it in a
+    sample) -> (rows, bytes) it hands to the program."""
     if workload == "etl_roundtrip":
-        return ({"load": expect["lineitem_rows"], "insert": expect["orders_rows"],
-                 "unload": expect["unload"]["rows"]},
-                {"load": expect["csv_bytes"], "insert": expect["orders_bytes"]})
+        return {"lineitem_csv": (expect["lineitem_rows"], expect["csv_bytes"]),
+                "orders.parquet": (expect["orders_rows"], expect["orders_bytes"])}
     if workload == "neardup_ingest":
-        # arrival 0 has no earlier documents to copy; every later one
-        # has the same count and near-identical bytes
-        arr = expect["arrivals"][1:]
-        return ({"batch": sum(a["docs"] for a in arr) / len(arr)},
-                {"batch": sum(a["bytes"] for a in arr) / len(arr)})
-    ops = gen.read_ops(inp)
-    files = [op for op in ops if op["kind"] in ("append", "merge")]
-    per = {}
-    for kind in ("append", "merge"):
-        fs = [os.path.join(inp, "rows", op["file"]) for op in files if op["kind"] == kind]
-        per[kind] = (sum(pq.ParquetFile(f).metadata.num_rows for f in fs) / len(fs),
-                     sum(os.path.getsize(f) for f in fs) / len(fs))
-    return ({k: v[0] for k, v in per.items()}, {k: v[1] for k, v in per.items()})
+        return {f"arrivals/{a['path']}": (a["docs"], a["bytes"]) for a in expect["arrivals"]}
+    rows = os.path.join(inp, "rows")
+    return {f"rows/{f}": (pq.ParquetFile(os.path.join(rows, f)).metadata.num_rows,
+                          os.path.getsize(os.path.join(rows, f)))
+            for f in sorted(os.listdir(rows))}
 
 
 def main():
@@ -167,16 +159,17 @@ def main():
     shutil.rmtree(base, ignore_errors=True)
     inp = os.path.join(base, "in")
     expect = gen.generate(args.workload, args.seed, inp)
-    rows, nbytes = input_sizes(args.workload, inp, expect)
+    sizes = input_sizes(args.workload, inp, expect)
 
     record = run_jvm(cp, args, inp, os.path.join(base, "run"), args.seconds, False, deadline)
     problems = check.check(args.workload, record, expect, inp)
-    e2e, notes = metrics.end_to_end(record, rows, nbytes)
+    e2e, notes = metrics.end_to_end(record, sizes)
     if args.trace:
         traced = run_jvm(cp, args, inp, os.path.join(base, "traced"), args.seconds, True,
                          deadline)
         problems += check.check(args.workload, traced, expect, inp)
-        out, units = metrics.per_layer(traced, record, rows, nbytes), metrics.PER_LAYER
+        export_rows = expect.get("unload", {}).get("rows", 0)
+        out, units = metrics.per_layer(traced, record, sizes, export_rows), metrics.PER_LAYER
     else:
         out, units = e2e, metrics.END_TO_END
     samples = [s for s in record["samples"] if s["round"] >= 0]

@@ -12,10 +12,11 @@ import graft.schema.Infer
 import graft.streaming.{NearDupIndex, Stream}
 
 /** One operation of the closed loop: its round (-1 = warm-up), kind,
-  * class (commit or read), interval, outcome, and the Hadoop
-  * filesystem bytes the process read and wrote while it ran. */
-final case class Sample(round: Int, kind: String, cls: String, t0: Double,
-    t1: Double, ok: Boolean, fsRead: Long, fsWritten: Long, error: String)
+  * class (commit or read), the generated input it consumed (a path
+  * under the input directory, empty for none), interval, outcome, and
+  * the Hadoop filesystem bytes the process read and wrote while it ran. */
+final case class Sample(round: Int, kind: String, cls: String, input: String,
+    t0: Double, t1: Double, ok: Boolean, fsRead: Long, fsWritten: Long, error: String)
 
 /** The benchmark client: one process, one caller, each operation
   * starting after the previous one returns. It builds the session, runs
@@ -35,13 +36,20 @@ final class Bench(workload: String, in: String, work: String, seed: Long,
   private var spark: SparkSession = _
   private var round = -1
 
-  /** Set-up repetitions per run; the run reports their median. */
-  private val SetupReps = 3
+  /** Warm set-ups per run, after one cold one; the run reports their
+    * median. A warm set-up is about 0.1 s on etl and neardup, 1.5 s on
+    * lakehouse, so the cheap ones repeat more. */
+  private val EtlSetups = 25
+  private val NearDupSetups = 25
+  private val LakeSetups = 3
   private val PageRankIterations = 3
-  /** Nominal seconds of one measured round at `local[3]`. */
-  private val EtlRoundS = 7.0
+  /** Seconds of `--seconds` one measured unit stands for: about the
+    * unit's time at `local[3]`, except etl's round, which takes about
+    * 8 s but is charged 4 s, so that a run measures three rounds: with
+    * two, its read tail spread over ten seeds reached its bound. */
+  private val EtlRoundS = 4.0
   private val NearDupArrivalS = 4.8
-  private val LakeCycleS = 9.5
+  private val LakeCycleS = 11.5
 
   def run(): Map[String, Any] = {
     workload match {
@@ -64,9 +72,9 @@ final class Bench(workload: String, in: String, work: String, seed: Long,
 
   /** Run `body` as one timed operation. A thrown operation is recorded
     * as failed with its error and never as a timed success. */
-  private def timed[A](kind: String, cls: String)(body: => A): Option[A] = {
+  private def timed[A](kind: String, cls: String, input: String = "")(body: => A): Option[A] = {
     val (r0, w0, t0) = (FsBytes.read, FsBytes.written, clock.now)
-    def record(ok: Boolean, err: String) = samples += Sample(round, kind, cls,
+    def record(ok: Boolean, err: String) = samples += Sample(round, kind, cls, input,
       t0, clock.now, ok, FsBytes.read - r0, FsBytes.written - w0, err)
     try {
       val r = tracer.op(kind)(body)
@@ -79,11 +87,11 @@ final class Bench(workload: String, in: String, work: String, seed: Long,
     }
   }
 
-  /** Build the session and prepare the program `SetupReps` times; keep
-    * the last session. Only the benchmark's own bookkeeping happens
-    * outside the measured interval. */
-  private def setUp(prep: () => Unit): Unit = {
-    for (k <- 1 to SetupReps) {
+  /** Build the session and prepare the program once cold (class loading,
+    * not reported) and then `warm` times; keep the last session. Only the
+    * benchmark's own bookkeeping happens outside the measured interval. */
+  private def setUp(warm: Int)(prep: () => Unit): Unit = {
+    for (k <- 0 to warm) {
       val t0 = clock.now
       spark = tracer.span("core.Session.build") {
         Session.build(master = s"local[$cores]", appName = "perfbench",
@@ -91,8 +99,8 @@ final class Bench(workload: String, in: String, work: String, seed: Long,
             "spark.local.dir" -> s"$work/spark-local"))
       }
       prep()
-      setupS += clock.now - t0
-      if (k < SetupReps) {
+      if (k > 0) setupS += clock.now - t0
+      if (k < warm) {
         spark.stop()
         deleteTree(new File(warehouse))
       }
@@ -124,7 +132,7 @@ final class Bench(workload: String, in: String, work: String, seed: Long,
     val li = "bench_lineitem"
     val od = "bench_orders"
     var exec: Exec = null
-    setUp { () =>
+    setUp(EtlSetups) { () =>
       Seq(li, od).foreach(Load.dropManaged(spark, _))
       exec = new Exec(spark)
     }
@@ -148,7 +156,7 @@ final class Bench(workload: String, in: String, work: String, seed: Long,
     val perRound = ArrayBuffer.empty[Map[String, Any]]
 
     def oneRound(csv: String): Unit = {
-      timed("load", "commit") {
+      timed("load", "commit", csv.stripPrefix(s"$in/")) {
         tracer.span("io.Load.loadAndCopy") {
           Load.loadAndCopy(spark, csv, li, options = Map("field_delimiter" -> "|"),
             header = true, mode = SaveMode.Overwrite)
@@ -160,7 +168,7 @@ final class Bench(workload: String, in: String, work: String, seed: Long,
         }
       }
       Load.dropManaged(spark, od)
-      timed("insert", "commit") {
+      timed("insert", "commit", "orders.parquet") {
         tracer.span("io.Insert.insertDataFrame") {
           Insert.insertDataFrame(spark, spark.read.parquet(s"$in/orders.parquet"), od,
             create = true)
@@ -228,7 +236,7 @@ final class Bench(workload: String, in: String, work: String, seed: Long,
     val lookupIds = scala.io.Source.fromFile(s"$in/lookups.tsv").getLines()
       .map(_.split("\t").toSeq.map(_.toLong)).toVector
     var exec: Exec = null
-    setUp(() => exec = new Exec(spark))
+    setUp(NearDupSetups)(() => exec = new Exec(spark))
     val batches = ArrayBuffer.empty[Map[String, Any]]
 
     def episode(name: String, files: Seq[String]): Unit = {
@@ -240,7 +248,7 @@ final class Bench(workload: String, in: String, work: String, seed: Long,
       for ((f, a) <- files.zipWithIndex) {
         Files.copy(new File(s"$in/arrivals/$f").toPath, new File(dir, f).toPath,
           StandardCopyOption.REPLACE_EXISTING)
-        val ingested = timed("batch", "commit") {
+        val ingested = timed("batch", "commit", s"arrivals/$f") {
           tracer.span("streaming.Stream.runNearDupDir") {
             Stream.runNearDupDir(spark, dir.toString, ckpt, table)
           }
@@ -294,7 +302,7 @@ final class Bench(workload: String, in: String, work: String, seed: Long,
     val spec = AggView.spec("event_type").count("n").sum("value", "s")
     def append(file: String) = ManifestTable.append(spark, root,
       spark.read.parquet(s"$in/rows/$file"), statsCols = Seq("ts"), bloomCols = Seq("event_id"))
-    setUp { () =>
+    setUp(LakeSetups) { () =>
       append("initial.parquet")
       // the view's change feed reads pre-images of rewritten segments
       ManifestTable.setRetainVersions(spark, root, 64)
@@ -307,10 +315,10 @@ final class Bench(workload: String, in: String, work: String, seed: Long,
     def runOp(op: Array[String]): Unit = {
       val (kind, file) = (op(1), op(2))
       kind match {
-        case "append" => timed(kind, "commit") {
+        case "append" => timed(kind, "commit", s"rows/$file") {
             tracer.span("io.manifest.ManifestTable.append")(append(file))
           }
-        case "merge" => timed(kind, "commit") {
+        case "merge" => timed(kind, "commit", s"rows/$file") {
             tracer.span("io.manifest.ManifestDml.mergeInto") {
               val set = cols.map(c => c -> col(s"__s.$c"))
               ManifestDml.mergeInto(spark, root, spark.read.parquet(s"$in/rows/$file"),

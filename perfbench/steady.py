@@ -2,12 +2,13 @@
 end-to-end metric, the median, the quartiles and the spread (quartile
 distance over median), next to the bound BENCHMARK.json fixes.
 
-    python3 perfbench/steady.py --workload NAME --seeds 1,2,3,4,5 [--seconds S]
+    python3 perfbench/steady.py --workload NAME --seeds 1,2,3,4,5
     python3 perfbench/steady.py --workload NAME --seed 7 --repeat 5
 
 Give --seeds for the contract's check (a new seed per run) and --repeat
-for run-to-run noise on one seed. Run from the repository root. Exits
-nonzero if any run fails or is incorrect. --json writes every value.
+for run-to-run noise on one seed. Every run measures BENCHMARK.json's
+run_seconds. Run from the repository root. Exits nonzero if any run
+fails or is incorrect.
 """
 import argparse
 import json
@@ -32,13 +33,11 @@ def main():
     ap.add_argument("--seeds", help="comma-separated seeds, one run each")
     ap.add_argument("--seed", type=int, help="one seed, run --repeat times")
     ap.add_argument("--repeat", type=int, default=5)
-    ap.add_argument("--seconds", type=int)
-    ap.add_argument("--json", help="write every run's metrics here")
     args = ap.parse_args()
     signal.signal(signal.SIGTERM, lambda *_: sys.exit("terminated"))
     with open(os.path.join(os.path.dirname(HERE), "BENCHMARK.json")) as f:
         bench = json.load(f)
-    seconds = args.seconds or bench["run_seconds"]
+    seconds = bench["run_seconds"]
     seeds = ([int(s) for s in args.seeds.split(",")] if args.seeds
              else [args.seed] * args.repeat)
     runs = []
@@ -68,9 +67,6 @@ def main():
         q1, q2, q3, sp = spread([r[m["name"]] for r in runs])
         flag = "" if sp <= m["bound"] / 3 else "  > bound/3"
         print(f"{m['name']:32s} {q1:10.4g} {q2:10.4g} {q3:10.4g} {sp:8.3f} {m['bound']:6.2f}{flag}")
-    if args.json:
-        with open(args.json, "w") as f:
-            json.dump({"workload": args.workload, "seeds": seeds, "runs": runs}, f)
 
 
 if __name__ == "__main__":

@@ -1,5 +1,6 @@
 """The benchmark's own tests: input determinism, metric names, span
-self-time arithmetic, job attribution and the tail-percentile rule.
+self-time arithmetic, job attribution, the tail-percentile rule and its
+Harrell-Davis estimate.
 
     python3 -m unittest perfbench/test_perfbench.py
 """
@@ -108,6 +109,47 @@ class SelfTimeTest(unittest.TestCase):
         self.assertEqual(metrics.attribute_jobs(spans, jobs), {0: 1, 1: 2, 2: 3})
 
 
+def sample(kind, cls, t0, t1, inp="", rnd=0, ok=True, written=0):
+    return {"round": rnd, "kind": kind, "cls": cls, "input": inp, "t0": t0, "t1": t1,
+            "ok": ok, "fsRead": 0, "fsWritten": written, "error": ""}
+
+
+class EndToEndTest(unittest.TestCase):
+    def test_hand_built_record(self):
+        sizes = {"a.csv": (1000, 400), "b.parquet": (30, 100)}
+        record = {"setup_s": [0.3, 0.1, 0.2], "samples": [
+            sample("load", "commit", -5.0, -1.0, "a.csv", rnd=-1, written=999),  # warm-up
+            sample("load", "commit", 0.0, 2.0, "a.csv", written=100),
+            sample("insert", "commit", 2.0, 3.0, "b.parquet", written=50),
+            sample("query", "read", 3.0, 3.5),
+            sample("query", "read", 3.5, 4.5),
+            sample("query", "read", 4.5, 4.6, ok=False),  # failed: never timed
+            sample("unload", "commit", 5.0, 9.0, written=250),
+        ]}
+        m, notes = metrics.end_to_end(record, sizes)
+        self.assertEqual(m["setup_s"], 0.2)
+        self.assertAlmostEqual(m["commit_mean_s"], 7.0 / 3)
+        # Harrell-Davis p50 of [1, 2, 4]: Beta(2, 2) weights 7/27, 13/27, 7/27
+        self.assertAlmostEqual(m["commit_tail_s"], 61 / 27, places=4)
+        self.assertAlmostEqual(m["read_mean_s"], 0.75)
+        self.assertEqual(notes["read_tail_s"], {"n": 2, "percentile": 50.0})
+        # unload exports rows but ingests none: only load and insert count
+        self.assertAlmostEqual(m["ingest_rows_per_s"], 1030 / 3.0)
+        self.assertEqual(notes["ingest_rows_per_s"], {"n": 2, "rows": 1030})
+        self.assertAlmostEqual(m["bytes_written_per_input_byte"], 400 / 500)
+
+    def test_input_of_each_arrival(self):
+        sizes = {"arrivals/a0": (70, 7000), "arrivals/a1": (80, 8100)}
+        record = {"setup_s": [0.1], "samples": [
+            sample("batch", "commit", 0.0, 1.0, "arrivals/a0"),
+            sample("batch", "commit", 1.0, 3.0, "arrivals/a1"),
+            sample("corpus_read", "read", 3.0, 3.1)]}
+        m, _ = metrics.end_to_end(record, sizes)
+        self.assertAlmostEqual(m["ingest_rows_per_s"], 150 / 3.0)
+        self.assertEqual(metrics.kind_input(record, sizes, "batch"), (75, 7550))
+        self.assertEqual(metrics.kind_input(record, sizes, "load"), (0, 0))
+
+
 class TailTest(unittest.TestCase):
     def test_tail_percentile_rule(self):
         # at least 10 samples strictly above the nearest-rank position
@@ -116,11 +158,16 @@ class TailTest(unittest.TestCase):
                      (1000, 99.0), (10000, 99.9)):
             self.assertEqual(metrics.tail_percentile(n), p, n)
 
-    def test_nearest_rank(self):
+    def test_harrell_davis_percentile(self):
+        self.assertAlmostEqual(metrics.percentile([3.0], 50.0), 3.0)
+        self.assertAlmostEqual(metrics.percentile([5.0] * 7, 50.0), 5.0)
+        # symmetric weights at p50 put the estimate on the middle of evenly spaced values
+        self.assertAlmostEqual(metrics.percentile([5, 1, 4, 2, 3], 50.0), 3.0)
         values = list(range(1, 101))
-        self.assertEqual(metrics.percentile(values, 90.0), 90)
-        self.assertEqual(metrics.percentile(values, 50.0), 50)
-        self.assertEqual(metrics.percentile([3.0], 99.0), 3.0)
+        self.assertAlmostEqual(metrics.percentile(values, 90.0), 90.5, places=4)
+        self.assertLess(metrics.percentile(values, 75.0), metrics.percentile(values, 90.0))
+        # one slow sample moves it a little, not to the next sample
+        self.assertLess(metrics.percentile([1, 1, 1, 1, 9], 50.0), 2.0)
 
 
 if __name__ == "__main__":
